@@ -368,27 +368,29 @@ MAIN_TEXT_FIELDS = (
 )
 
 
-def extract_main_text(
-    df: DataFrame, passthrough=("doc_id", "url"), stage_metrics: bool = False
-) -> DataFrame:
-    """Flagship stage on the Arrow fast path: ``mapInArrow`` with fully
-    vectorized output construction (span struct arrays built from
-    concatenated numpy columns + offsets — no per-row dict conversion;
-    ~25-30% over the generic pandas runner on the bench corpus).
-
-    Output ``spans`` follow :func:`main_text_program`'s offset
-    contract: indices into the decoded, newline-normalized parser
-    input, not the raw ``html`` bytes."""
-    import pyarrow as pa
-
-    pt_types = _passthrough_types(df, passthrough)
+def main_text_schema(pt_types, stage_metrics: bool = False) -> str:
+    """DDL of :func:`extract_main_text`'s output: the ``(name, type)``
+    passthrough columns, the main-text fields and, with
+    ``stage_metrics``, the per-document engine telemetry."""
     schema = ", ".join([*(f"{c} {t}" for c, t in pt_types), MAIN_TEXT_FIELDS])
     if stage_metrics:
         schema += ", parse_us bigint, kernel_us bigint, c_engine tinyint"
-    n_pt = len(passthrough)
+    return schema
+
+
+def main_text_batches(pt_types, stage_metrics: bool = False):
+    """The flagship kernel as a ``mapInArrow`` batch function: input
+    batches carry the ``pt_types`` passthrough columns followed by
+    ``html``; output batches follow :func:`main_text_schema`.  Shared
+    by :func:`extract_main_text` and the resumable writer in
+    ``plans/lineage.py``, so both run the same kernel path."""
+    n_pt = len(pt_types)
+    pt_names = [c for c, _ in pt_types]
 
     def fn(batches) -> "Iterator[pa.RecordBatch]":
         import time as _time
+
+        import pyarrow as pa
 
         from ..parser import cengine as _ce, html5 as _h5
         from ..parser.html5 import _cstats
@@ -396,7 +398,6 @@ def extract_main_text(
         clk = _time.perf_counter
         empty_i32 = np.array([], np.int32)
         empty_i64 = np.array([], np.int64)
-        pt_names = [c for c, _ in pt_types]
         # whole-column C fast path (round-6): one extension call per
         # Arrow batch, no per-document Python loop at all.  Gated like
         # the per-doc fast path; any non-engageable layout (nulls,
@@ -509,17 +510,34 @@ def extract_main_text(
             cols = [rb.column(i) for i in range(n_pt)]
             cols += [pa.array(texts, pa.string()), spans,
                      pa.array(nn, pa.int32()), pa.array(pe, pa.int32())]
-            names = [*(c for c, _ in pt_types), "text", "spans", "n_nodes", "parse_errors"]
+            names = [*pt_names, "text", "spans", "n_nodes", "parse_errors"]
             if stage_metrics:
                 cols += [pa.array(parse_us, pa.int64()), pa.array(kernel_us, pa.int64()),
                          pa.array(c_engine, pa.int8())]
                 names += ["parse_us", "kernel_us", "c_engine"]
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
+    return fn
+
+
+def extract_main_text(
+    df: DataFrame, passthrough=("doc_id", "url"), stage_metrics: bool = False
+) -> DataFrame:
+    """Flagship stage on the Arrow fast path: ``mapInArrow`` with fully
+    vectorized output construction (span struct arrays built from
+    concatenated numpy columns + offsets — no per-row dict conversion;
+    ~25-30% over the generic pandas runner on the bench corpus).
+
+    Output ``spans`` follow :func:`main_text_program`'s offset
+    contract: indices into the decoded, newline-normalized parser
+    input, not the raw ``html`` bytes."""
     from gumbo_pp_spark.plans.partitioning import ensure_min_parallelism
 
+    pt_types = _passthrough_types(df, passthrough)
     pruned = ensure_min_parallelism(df.select(*passthrough, "html"))
-    return pruned.mapInArrow(fn, schema)
+    return pruned.mapInArrow(
+        main_text_batches(pt_types, stage_metrics), main_text_schema(pt_types, stage_metrics)
+    )
 
 
 # ----------------------------------------------------------------------

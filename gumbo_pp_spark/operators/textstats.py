@@ -1111,9 +1111,11 @@ def top_word_frac_e4_expr(text_col: str = "text") -> str:
     a lambda variable via the ``transform(array(x), v -> ..)[1]``
     idiom instead of being textually repeated."""
     sw_val = f"array_sort(split({text_col}, ' '))"
+    # the ``if`` keeps element_at(sw, 0) from ever being evaluated,
+    # whatever order an ``OR`` would evaluate its operands in
     starts_val = (
         "filter(sequence(1, size(sw)), "
-        "j -> j = 1 OR element_at(sw, j) != element_at(sw, j - 1))"
+        "j -> if(j = 1, true, element_at(sw, j) != element_at(sw, j - 1)))"
     )
     top = (
         "array_max(transform(sequence(1, size(st)), "

@@ -8,15 +8,35 @@ Design (SURVEY.md §4 c/d):
 * the corpus is split into ``n_splits`` stable work units by
   ``pmod(xxhash64(url), n_splits)`` — url-hash splits are reproducible
   across runs and clusters, unlike task/partition ids;
-* each run writes output under ``data/run=<run_id>/`` (its own
-  directory → a killed run can never corrupt committed data), then
-  atomically commits one ledger record per finished split
-  (``_ledger/split_<id>.json`` via tmp+rename);
 * resume = recompute pending as ``all_splits − committed`` and process
   only those; readers union exactly the (split, run) pairs the ledger
-  committed, so partially-written uncommitted runs are invisible;
-* ledger records carry the per-partition metrics the bench reports
-  (rows, bytes, wall_ms, attempt).
+  committed, so partially-written uncommitted runs are invisible.
+
+A run commits in three steps, after the Iceberg writer protocol (tasks
+write data files and report them, the driver commits):
+
+1. **write** — ONE Spark job (``mapInArrow`` → ``collect``): each task
+   runs the main-text kernel, groups its output by split, writes one
+   pyarrow parquet file per (task, split) under
+   ``data/run=<run_id>/split_id=<s>/`` with a hidden in-progress name
+   (:data:`INPROGRESS`, a leading ``.`` that Spark's file listing
+   skips), and returns one small stats row per file — extracted rows
+   never go back to the JVM;
+2. **publish** — the driver renames each reported file to its final
+   ``part-<uuid>.snappy.parquet`` name.  ``collect`` returns exactly
+   one successful attempt per partition, so files of failed or
+   speculative attempts stay hidden (``vacuum_uncommitted`` removes
+   them once stale);
+3. **commit** — the driver sums the file rows per split and atomically
+   commits one ledger record per pending split
+   (``_ledger/split_<id>.json`` via tmp+rename) carrying the
+   per-partition metrics (rows, bytes, parse/kernel ms, engine
+   telemetry, wall_ms, attempt).  Each run writes into its own
+   directory, so a killed run can never corrupt committed data.
+
+Tasks and the ledger use plain filesystem calls, so ``out_dir`` must be
+a path that the driver and every executor see (local mode, or a shared
+mount on a cluster).
 """
 
 from __future__ import annotations
@@ -26,7 +46,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 
 class PartitionLedger:
@@ -159,6 +179,69 @@ class PartitionLedger:
         return len(tails)
 
 
+# in-progress data files: a task writes under this hidden name (Spark's
+# file listing skips names starting with "." or "_"), the driver
+# renames reported files to their final ``part-`` name before commit
+INPROGRESS = ".inprogress-"
+
+# the per-file result rows of the write job; ``bytes`` is the text
+# length in characters, as Spark's ``length`` counts it
+FILE_STATS = (
+    "split_id int, file string, rows bigint, bytes bigint, parse_us bigint, "
+    "kernel_us bigint, parse_errors bigint, c_docs bigint"
+)
+_SUMS = ("rows", "bytes", "parse_us", "kernel_us", "parse_errors", "c_docs")
+
+
+def _split_file_writer(pt_types, data_dir: str, file_schema, stats_schema):
+    """``mapInArrow`` task body of :func:`extract_with_resume`: run the
+    main-text kernel, group each output batch by ``split_id``, buffer
+    the slices per split for the task, then write one hidden parquet
+    file per (task, split) under ``data_dir/split_id=<s>/`` and yield
+    one :data:`FILE_STATS` row per file.  The buffer holds one task's
+    output, bounded by the scan split size."""
+    from ..operators.extract import main_text_batches
+
+    kernel = main_text_batches(pt_types, stage_metrics=True)
+    sid_col = [c for c, _ in pt_types].index("split_id")
+    keep = [i for i in range(len(file_schema) + 1) if i != sid_col]
+
+    def fn(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        parts: dict[int, list] = {}
+        for rb in kernel(batches):
+            if rb.num_rows == 0:
+                continue
+            sid = rb.column(sid_col).to_numpy()
+            order = np.argsort(sid, kind="stable")
+            sid = sid[order]
+            data = pa.RecordBatch.from_arrays(
+                [rb.column(i) for i in keep], names=file_schema.names
+            ).cast(file_schema).take(pa.array(order))
+            cuts = [0, *(np.flatnonzero(sid[1:] != sid[:-1]) + 1).tolist(), len(sid)]
+            for lo, hi in zip(cuts, cuts[1:]):
+                parts.setdefault(int(sid[lo]), []).append(data.slice(lo, hi - lo))
+        rows = []
+        for s, slices in parts.items():
+            table = pa.Table.from_batches(slices, schema=file_schema)
+            leaf = os.path.join(data_dir, f"split_id={s}")
+            os.makedirs(leaf, exist_ok=True)
+            path = os.path.join(leaf, f"{INPROGRESS}{uuid.uuid4()}.snappy.parquet")
+            pq.write_table(table, path, compression="snappy")
+            sums = {"bytes": pc.utf8_length(table["text"]), "parse_us": table["parse_us"],
+                    "kernel_us": table["kernel_us"], "parse_errors": table["parse_errors"],
+                    "c_docs": table["c_engine"]}
+            rows.append({"split_id": s, "file": path, "rows": table.num_rows,
+                         **{k: pc.sum(v).as_py() for k, v in sums.items()}})
+        yield pa.RecordBatch.from_pylist(rows, schema=stats_schema)
+
+    return fn
+
+
 def extract_with_resume(
     spark: SparkSession,
     pages: DataFrame,
@@ -171,90 +254,77 @@ def extract_with_resume(
 
     ``max_splits_this_run`` exists for fault-injection tests (process
     only K pending splits, as if the job were killed after K commits).
-    Returns run metrics.
+    Returns run metrics, with run totals (``rows``, ``c_docs``,
+    ``py_docs``, ``parse_errors``, ``files``) summed from the write
+    job's per-file rows.
     """
-    from ..operators.extract import extract_main_text
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    from ..operators.extract import _passthrough_types, main_text_schema
+    from .partitioning import ensure_min_parallelism
+
+    out_dir = os.path.abspath(out_dir)  # executors write to it directly
     ledger = PartitionLedger(os.path.join(out_dir, "_ledger"))
     done = set(ledger.committed())
     pending = [s for s in range(n_splits) if s not in done]
     if max_splits_this_run is not None:
         pending = pending[:max_splits_this_run]
     if not pending:
-        return {"run_id": None, "splits_processed": 0, "skipped": len(done)}
+        return {"run_id": None, "splits_processed": 0, "skipped": len(done),
+                **dict.fromkeys(("rows", "c_docs", "py_docs", "parse_errors", "files"), 0)}
 
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
     work = pages.withColumn(
         "split_id", F.pmod(F.xxhash64("url"), F.lit(n_splits)).cast("int")
     ).where(F.col("split_id").isin(pending))
-    out = extract_main_text(work, passthrough=(*passthrough, "split_id"), stage_metrics=True)
+    pt_types = _passthrough_types(work, (*passthrough, "split_id"))
+    file_schema = to_arrow_schema(T.StructType.fromDDL(main_text_schema(
+        [pt for pt in pt_types if pt[0] != "split_id"], stage_metrics=True)))
+    stats_schema = to_arrow_schema(T.StructType.fromDDL(FILE_STATS))
     data_dir = os.path.join(out_dir, "data", f"run={run_id}")
-    out.write.partitionBy("split_id").mode("error").parquet(data_dir)
-
-    # per-split metrics from the committed files (cheap: output only).
-    # Guarded: when EVERY pending split was empty (reachable on resume
-    # with max_splits_this_run or a sparse corpus vs n_splits) the
-    # write leaves a schemaless empty dir and the read raises — commit
-    # zero-row ledger records instead of crashing every future resume.
-    # The guard is structural (typed exception + "did the write emit
-    # any part files?"), not a message-substring match: Spark's error
-    # text varies across versions/error-class settings.
-    from pyspark.errors import AnalysisException
-
-    try:
-        stats = (
-            spark.read.parquet(data_dir)
-            .groupBy("split_id")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.length("text")).alias("bytes"),
-                F.sum("parse_us").alias("parse_us"),
-                F.sum("kernel_us").alias("kernel_us"),
-                F.sum("parse_errors").alias("parse_errors"),
-                F.sum("c_engine").alias("c_docs"),
-            )
-            .collect()
-        )
-    except AnalysisException:
-        wrote_parts = any(
-            fn.startswith("part-")
-            for _root, _dirs, files in os.walk(data_dir)
-            for fn in files
-        )
-        if wrote_parts:  # data exists but the read failed — a real error
-            raise
-        stats = []
+    # the one Spark job: tasks write their files, the driver gets
+    # per-file stats back (one successful attempt per partition)
+    files = (
+        ensure_min_parallelism(work.select(*passthrough, "split_id", "html"))
+        .mapInArrow(_split_file_writer(pt_types, data_dir, file_schema, stats_schema), FILE_STATS)
+        .collect()
+    )
+    by_split: dict[int, dict] = {}
+    for f in files:
+        path = f["file"]
+        head, name = os.path.split(path)
+        os.replace(path, os.path.join(head, "part-" + name[len(INPROGRESS):]))
+        acc = by_split.setdefault(f["split_id"], dict.fromkeys(_SUMS, 0))
+        for k in _SUMS:
+            acc[k] += f[k]
     wall_ms = int((time.time() - t0) * 1000)
-    by_split = {int(r["split_id"]): r for r in stats}
     # Per-split wall attribution: all splits commit from ONE Spark job,
     # so the only measured per-split times are the executor-side
     # parse_us/kernel_us sums.  busy_ms is that measured work; wall_ms
     # is the run's wall apportioned by busy share (splits with more
     # work get more wall), so per-split wall is distinct and sums to
     # the run wall instead of repeating it n_splits times.
-    total_busy = sum(
-        int(r["parse_us"]) + int(r["kernel_us"]) for r in stats
-    ) or 1
+    total_busy = sum(r["parse_us"] + r["kernel_us"] for r in by_split.values()) or 1
+    empty = dict.fromkeys(_SUMS, 0)
     for s in pending:
-        r = by_split.get(s)
-        busy_us = (int(r["parse_us"]) + int(r["kernel_us"])) if r else 0
+        r = by_split.get(s, empty)
+        busy_us = r["parse_us"] + r["kernel_us"]
         ledger.commit(
             {
                 "split_id": s,
                 "run_id": run_id,
                 "status": "committed",
-                "rows": int(r["rows"]) if r else 0,
-                "bytes": int(r["bytes"]) if r and r["bytes"] is not None else 0,
-                "parse_ms": int(r["parse_us"] / 1000) if r else 0,
-                "kernel_ms": int(r["kernel_us"] / 1000) if r else 0,
-                "parse_errors": int(r["parse_errors"]) if r else 0,
+                "rows": r["rows"],
+                "bytes": r["bytes"],
+                "parse_ms": int(r["parse_us"] / 1000),
+                "kernel_ms": int(r["kernel_us"] / 1000),
+                "parse_errors": r["parse_errors"],
                 # engine engagement telemetry (round-6): at 100 TB this
                 # is how a run sees what fraction of documents paid the
                 # ~10x slower Python-tail price
-                "c_docs": int(r["c_docs"]) if r and r["c_docs"] is not None else 0,
-                "py_docs": (int(r["rows"]) - int(r["c_docs"])) if r and r["c_docs"] is not None
-                           else (int(r["rows"]) if r else 0),
+                "c_docs": r["c_docs"],
+                "py_docs": r["rows"] - r["c_docs"],
                 "busy_ms": busy_us // 1000,
                 "wall_ms": int(wall_ms * busy_us / total_busy),
                 "run_wall_ms": wall_ms,
@@ -265,11 +335,15 @@ def extract_with_resume(
     # roll this run's commits into the manifest so the NEXT resume
     # starts from O(1) file reads regardless of how many splits ran
     ledger.compact()
+    totals = {k: sum(f[k] for f in files) for k in ("rows", "c_docs", "parse_errors")}
     return {
         "run_id": run_id,
         "splits_processed": len(pending),
         "skipped": len(done),
         "wall_ms": wall_ms,
+        **totals,
+        "py_docs": totals["rows"] - totals["c_docs"],
+        "files": len(files),
     }
 
 
@@ -278,21 +352,25 @@ def vacuum_uncommitted(out_dir: str, min_age_sec: float = 24 * 3600.0) -> dict:
     ledger record — crashed/abandoned run leftovers (the Iceberg
     remove-orphan-files analogue; without it a table that survives
     many partial runs slowly accretes dead bytes no read will ever
-    touch).  The ledger and every committed ``run=…/split_id=…`` leaf
-    are untouched; a run directory left with no leaves is removed
-    whole (including its ``_SUCCESS`` marker).
+    touch) — and hidden in-progress files (:data:`INPROGRESS`) that
+    failed or speculative task attempts left behind, also inside
+    committed leaves.  The ledger and the ``part-`` files of every
+    committed ``run=…/split_id=…`` leaf are untouched; a run directory
+    left with no leaves is removed whole.
 
     CONCURRENCY (ADVICE r7): ``extract_with_resume`` writes data
     files BEFORE committing their ledger records, so an uncommitted
-    leaf may belong to an in-flight run — deleting it would let that
-    run commit records pointing at vanished paths (splits marked
-    committed forever but unreadable).  Leaves younger than
-    ``min_age_sec`` (default 24 h — Iceberg's remove-orphan-files
-    default) are therefore kept; pass ``min_age_sec=0`` only when no
-    writer can be running.  ``read_extracted`` (incl.
-    ``as_of``/``since``) only resolves paths through committed
-    records, which vacuum keeps by construction.  Returns
-    ``{"removed": [...], "kept": n, "skipped_recent": m}``."""
+    leaf or an in-progress file may belong to an in-flight run —
+    deleting it would let that run commit records pointing at vanished
+    paths (splits marked committed forever but unreadable).  Leaves
+    and in-progress files younger than ``min_age_sec`` (default 24 h —
+    Iceberg's remove-orphan-files default) are therefore kept; pass
+    ``min_age_sec=0`` only when no writer can be running.
+    ``read_extracted`` (incl. ``as_of``/``since``) only resolves paths
+    through committed records, which vacuum keeps by construction.
+    Returns ``{"removed": [...], "kept": n, "skipped_recent": m}``
+    (``removed`` paths relative to ``data/``; ``kept`` counts committed
+    leaves)."""
     import shutil
 
     ledger = PartitionLedger(os.path.join(out_dir, "_ledger"))
@@ -315,19 +393,26 @@ def vacuum_uncommitted(out_dir: str, min_age_sec: float = 24 * 3600.0) -> dict:
             if not leaf.startswith("split_id="):
                 continue
             sid = leaf.split("=", 1)[1]
+            lpath = os.path.join(rpath, leaf)
             if (run_id, sid) in keep:
                 kept += 1
-                continue
-            lpath = os.path.join(rpath, leaf)
-            try:
-                age = now - os.path.getmtime(lpath)
-            except OSError:
-                age = 0.0  # freshly gone / racing writer: leave it
-            if age < min_age_sec:
-                skipped_recent += 1
-                continue
-            shutil.rmtree(lpath)
-            removed.append(f"{run_dir}/{leaf}")
+                targets = [os.path.join(lpath, fn) for fn in sorted(os.listdir(lpath))
+                           if fn.startswith(INPROGRESS)]
+            else:
+                targets = [lpath]
+            for path in targets:
+                try:
+                    age = now - os.path.getmtime(path)
+                except OSError:
+                    age = 0.0  # freshly gone / racing writer: leave it
+                if age < min_age_sec:
+                    skipped_recent += 1
+                    continue
+                if os.path.isdir(path):
+                    shutil.rmtree(path)
+                else:
+                    os.remove(path)
+                removed.append(os.path.relpath(path, data))
         if not any(d.startswith("split_id=") for d in os.listdir(rpath)):
             shutil.rmtree(rpath)
     return {"removed": removed, "kept": kept, "skipped_recent": skipped_recent}
@@ -359,13 +444,23 @@ def read_extracted(
         recs = ledger.committed(as_of=as_of)
     if not recs:
         raise FileNotFoundError(f"no committed splits under {out_dir}")
+    data = os.path.join(out_dir, "data")
     paths = sorted(
         {
-            os.path.join(out_dir, "data", f"run={r['run_id']}", f"split_id={s}")
+            os.path.join(data, f"run={r['run_id']}", f"split_id={s}")
             for s, r in recs.items()
             if r["rows"] > 0
         }
     )
+    if not paths:
+        raise FileNotFoundError(f"no committed rows under {out_dir}")
+    # ``run`` is typed as a string up front: left to partition-type
+    # inference, a hex run id such as 001234567890 or 1234e5678901
+    # reads back as a number
+    schema = (
+        spark.read.parquet(paths[0]).schema
+        .add("run", T.StringType()).add("split_id", T.IntegerType())
+    )
     # basePath keeps run/split_id partition columns while reading only
     # the committed leaf directories
-    return spark.read.option("basePath", os.path.join(out_dir, "data")).parquet(*paths)
+    return spark.read.schema(schema).option("basePath", data).parquet(*paths)

@@ -12,6 +12,11 @@ Packaging (north_rule: "run via spark-submit --py-files"):
 Resumable: re-running with the same --out skips ledger-committed
 splits (plans/lineage.py).  The output is readable via
 ``gumbo_pp_spark.plans.lineage.read_extracted``.
+
+Prints one JSON line: ``run_id``, ``splits_processed``, ``skipped``,
+``wall_ms`` and the run totals ``rows``, ``c_docs``, ``py_docs``,
+``parse_errors`` and ``files``, summed from the write job's per-file
+stats (no extra Spark job).
 """
 
 from __future__ import annotations

@@ -58,6 +58,11 @@ def test_extract_job_cli_transcode(spark, tmp_path):
         env={**os.environ, "PYTHONPATH": REPO},
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+    # run totals from the write job's per-file rows, no extra scan
+    metrics = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert metrics["rows"] == 2 and metrics["files"] >= 1
+    assert metrics["c_docs"] + metrics["py_docs"] == 2
+    assert metrics["parse_errors"] >= 0
     from gumbo_pp_spark.plans.lineage import read_extracted
 
     got = {r.doc_id: r.text for r in read_extracted(spark, out).collect()}

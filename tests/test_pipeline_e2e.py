@@ -82,6 +82,24 @@ def test_pipeline_drops_repetitive_docs(spark):
     assert kept == {2}
 
 
+
+def test_top_word_frac_expr_matches_python_oracle(spark):
+    # the row-local gate expression over the sorted word array: its
+    # first run start (j = 1) is guarded, so single-word documents and
+    # any OR evaluation order are safe
+    from collections import Counter
+
+    from gumbo_pp_spark.operators.textstats import top_word_frac_e4_expr
+
+    texts = ["spam", "a b a", "b a b a c", "x y z w", "q q q q r", "spam spam spam"]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = {r.text: r.f for r in df.select("text", F.expr(top_word_frac_e4_expr()).alias("f")).collect()}
+    for t in texts:
+        words = t.split(" ")
+        top = Counter(words).most_common(1)[0][1]
+        # round half up, as Spark's round does
+        assert got[t] == (2 * top * 10000 + len(words)) // (2 * len(words)), t
+
 def test_run_training_corpus_releases_caches_and_audits_recall(spark, tmp_path):
     """run_training_corpus = materialize + dedup-cache release (round-5
     cache-lifecycle fix) + optional ANN-recall audit stage."""

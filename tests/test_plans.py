@@ -243,6 +243,98 @@ class TestLedgerMetrics:
             assert total_c == 0
 
 
+
+class TestOneJobCommit:
+    """extract_with_resume is one Spark job: tasks write their split
+    files and return per-file stats, the driver renames and commits."""
+
+    @pytest.fixture(scope="class")
+    def pages_dir(self, spark, tmp_path_factory):
+        src = str(tmp_path_factory.mktemp("one_job") / "pages")
+        synth_pages(spark, SF_SMOKE).select("doc_id", "url", "html").write.parquet(src)
+        return src
+
+    def test_runs_exactly_one_spark_job(self, spark, pages_dir, tmp_path):
+        import os
+
+        sc = spark.sparkContext
+        pages = spark.read.parquet(pages_dir)
+        group = "extract_with_resume_one_job"
+        sc.setJobGroup(group, "one job per extract_with_resume")
+        try:
+            res = extract_with_resume(spark, pages, str(tmp_path / "out"), n_splits=8)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        # the job's result rows are per-file stats: one per data file
+        parts = [
+            fn for _root, _dirs, files in os.walk(str(tmp_path / "out" / "data"))
+            for fn in files
+        ]
+        assert len(parts) == res["files"] > 0
+        assert all(fn.startswith("part-") and fn.endswith(".snappy.parquet") for fn in parts)
+
+    def test_ledger_and_totals_equal_spark_recount(self, spark, pages_dir, tmp_path):
+        out_dir = str(tmp_path / "recount")
+        res = extract_with_resume(spark, spark.read.parquet(pages_dir), out_dir, n_splits=8)
+        recs = PartitionLedger(out_dir + "/_ledger").committed()
+        recount = {
+            r["split_id"]: r.asDict()
+            for r in read_extracted(spark, out_dir).groupBy("split_id").agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.length("text")).alias("bytes"),
+                F.sum("parse_us").alias("parse_us"),
+                F.sum("kernel_us").alias("kernel_us"),
+                F.sum("parse_errors").alias("parse_errors"),
+                F.sum("c_engine").alias("c_docs"),
+                F.sum(1 - F.col("c_engine")).alias("py_docs"),
+            ).collect()
+        }
+        assert set(recs) == set(range(8))
+        for s, rec in recs.items():
+            want = recount.get(s)
+            if want is None:
+                assert rec["rows"] == 0, rec
+                continue
+            for k in ("rows", "bytes", "parse_errors", "c_docs", "py_docs"):
+                assert rec[k] == want[k], (s, k, rec, want)
+            assert rec["parse_ms"] == int(want["parse_us"] / 1000)
+            assert rec["kernel_ms"] == int(want["kernel_us"] / 1000)
+        for k in ("rows", "c_docs", "py_docs", "parse_errors"):
+            assert res[k] == sum(r[k] for r in recount.values()), k
+        assert res["rows"] == 500
+
+    def test_read_extracted_schema_pinned(self, spark, pages_dir, tmp_path):
+        out_dir = str(tmp_path / "schema")
+        extract_with_resume(spark, spark.read.parquet(pages_dir), out_dir, n_splits=4)
+        assert read_extracted(spark, out_dir).schema.simpleString() == (
+            "struct<doc_id:bigint,url:string,text:string,"
+            "spans:array<struct<node_id:int,tag:string,start:bigint,end:bigint,"
+            "start_byte:bigint,end_byte:bigint>>,n_nodes:int,parse_errors:int,"
+            "parse_us:bigint,kernel_us:bigint,c_engine:tinyint,run:string,split_id:int>"
+        )
+
+    def test_numeric_looking_run_ids_read_as_strings(self, spark, tmp_path):
+        # hex run ids that partition-type inference would read as an
+        # int (001234567890) or a double (1234e5678901, 12345678901f)
+        import os
+
+        out_dir = str(tmp_path / "runs")
+        pages = synth_pages(spark, SF_SMOKE).limit(64)
+        extract_with_resume(spark, pages, out_dir, n_splits=3)
+        ledger = PartitionLedger(out_dir + "/_ledger")
+        data = os.path.join(out_dir, "data")
+        planted = {0: "001234567890", 1: "1234e5678901", 2: "12345678901f"}
+        for s, rec in ledger.committed().items():
+            run = planted[s]
+            os.makedirs(os.path.join(data, f"run={run}"))
+            os.rename(os.path.join(data, f"run={rec['run_id']}", f"split_id={s}"),
+                      os.path.join(data, f"run={run}", f"split_id={s}"))
+            ledger.commit({k: v for k, v in rec.items() if k != "seq"} | {"run_id": run})
+        got = read_extracted(spark, out_dir).select("split_id", "run").distinct().collect()
+        assert {r["split_id"]: r["run"] for r in got} == planted
+        assert read_extracted(spark, out_dir).count() == 64
+
 class TestPerSplitWall:
     def test_distinct_per_split_wall(self, spark, tmp_path):
         # round-3: per-split wall_ms is the run wall apportioned by the
@@ -415,6 +507,38 @@ class TestVacuum:
         assert read_extracted(spark, out_dir).count() == before
         ledger = PartitionLedger(out_dir + "/_ledger")
         assert set(ledger.committed()) == {0, 1, 2, 3}
+
+    def test_removes_stale_inprogress_files_in_committed_leaves(self, spark, tmp_path):
+        # a failed or speculative task attempt leaves its hidden
+        # in-progress file behind, also inside a committed leaf
+        import os
+        import shutil
+
+        from gumbo_pp_spark.plans.lineage import INPROGRESS, vacuum_uncommitted
+
+        out_dir = str(tmp_path / "vac_hidden")
+        pages = synth_pages(spark, SF_SMOKE)
+        extract_with_resume(spark, pages, out_dir, n_splits=4)
+        before = read_extracted(spark, out_dir).count()
+        rec = PartitionLedger(out_dir + "/_ledger").committed()[0]
+        leaf = os.path.join(out_dir, "data", f"run={rec['run_id']}", "split_id=0")
+        part = next(fn for fn in os.listdir(leaf) if fn.startswith("part-"))
+        # a real data file: readers that did not skip it would double rows
+        stale = os.path.join(leaf, f"{INPROGRESS}attempt1.snappy.parquet")
+        shutil.copy(os.path.join(leaf, part), stale)
+        assert read_extracted(spark, out_dir).count() == before
+
+        res = vacuum_uncommitted(out_dir)
+        assert res["removed"] == [] and res["skipped_recent"] == 1
+        assert os.path.exists(stale)
+
+        res = vacuum_uncommitted(out_dir, min_age_sec=0)
+        assert res["removed"] == [os.path.relpath(stale, os.path.join(out_dir, "data"))]
+        assert res["kept"] == 4
+        assert not os.path.exists(stale)
+        assert os.path.exists(os.path.join(leaf, part))
+        assert read_extracted(spark, out_dir).count() == before
+        assert len(PartitionLedger(out_dir + "/_ledger").committed()) == 4
 
     def test_vacuum_on_empty_table_is_noop(self, tmp_path):
         from gumbo_pp_spark.plans.lineage import vacuum_uncommitted
